@@ -196,8 +196,11 @@ object Bench {
     // runs after both measurement passes, so it cannot touch any number.
     // each replay gate fails independently: a normalizer regression
     // must not erase the casing gate's already-computed result
+    // a gate that cannot run says why instead of a bare "error"
     def goldGate(key: String)(run: => Seq[GoldSuite.EntryResult]): String =
-      try {
+      if (!GoldSuite.refDevPresent)
+        s""","$key":"unavailable: reference checkout absent""""
+      else try {
         val checked = run.filterNot(_.skipped)
         s""","$key":"${checked.count(_.ok)}/${checked.length}""""
       } catch { case scala.util.control.NonFatal(e) =>

@@ -24,6 +24,21 @@ object GoldSuite {
   private val TitanicUrl =
     "https://raw.githubusercontent.com/datasciencedojo/datasets/master/titanic.csv"
 
+  /** The reference benchmark's dev set — the one place every reader of
+    * the gold corpus (this suite, Bench's replay gates, the specs) takes
+    * it from. It lives in the read-only reference checkout, which a host
+    * may not have: check [[refDevPresent]] before reading. */
+  def refDevPath: String = RefDev
+
+  def refDevPresent: Boolean = new java.io.File(RefDev).isFile
+
+  /** The dev set's entries, in file order. */
+  def devEntries(): Seq[Map[String, Any]] =
+    new ObjectMapper().readValue(
+      Files.readString(Paths.get(RefDev)), classOf[java.util.List[Object]])
+      .asScala.toSeq.map(_.asInstanceOf[java.util.Map[String, Any]]
+        .asScala.toMap)
+
   def canonCell(v: Any): String = v match {
     case null => "NULL"
     case b: Boolean => b.toString
@@ -206,10 +221,7 @@ object GoldSuite {
       correctCasing: Boolean = false,
       normalized: Boolean = false): Seq[EntryResult] = {
     val mapper = new ObjectMapper()
-    val entries = mapper.readValue(
-      Files.readString(Paths.get(RefDev)), classOf[java.util.List[Object]])
-      .asScala.toSeq.map(_.asInstanceOf[java.util.Map[String, Any]]
-        .asScala.toMap)
+    val entries = devEntries()
     val expected = mapper.readValue(
       Files.readString(Paths.get(s"$Fix/gold_expected.json")),
       classOf[java.util.Map[String, Object]]).asScala

@@ -2977,8 +2977,9 @@ object PipelineQueries {
     // (see TextOps.exactSubstrDedup: union of duplicated 8-token
     // windows == the maximal duplicated spans). The oracle derives the
     // same spans INDEPENDENTLY: coverage via a correlated EXISTS range
-    // probe (dup start in [p-7, p]) instead of the engine's sliding-
-    // window max, so the two formulations cross-check each other.
+    // probe (dup start in [p-7, p]) instead of the engine's
+    // per-document span kernel, so the two formulations cross-check
+    // each other.
     "q199_exact_substr_dedup" -> api((spark, _) =>
       TextOps.exactSubstrDedup(spark.table("documents"),
         "doc_id", "text", n = 8).orderBy("doc_id"),

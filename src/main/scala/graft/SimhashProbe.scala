@@ -53,7 +53,7 @@ object SimhashProbe {
     var groups: org.apache.spark.sql.DataFrame = null
     time("stage_groups_ckpt") {
       groups = sigsCp.groupBy("sig").agg(
-        graft.functions.GraftFunctions.boundedMinLongs(col("id"), 3)
+        graft.functions.GraftFunctions.boundedMin(col("id"), 3)
           .as("head_ids")).localCheckpoint()
     }
     time("stage_groups_count")(println("  distinct=" + groups.count()))

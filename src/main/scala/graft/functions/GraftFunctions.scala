@@ -99,10 +99,12 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         keys.sorted, org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.LongType))))
-  /** Bounded "k smallest longs, sorted" aggregate — O(k) state per
-    * group vs collect_list's O(group). */
-  def boundedMinLongs(x: Column, k: Int): Column =
-    toCol(BoundedMinLongsAgg(toExpr(x), k).toAggregateExpression())
+  /** Bounded "k smallest, sorted" aggregate — O(k) state per group vs
+    * collect_list's O(group). For a struct `x`, `descending` gives each
+    * field's sort direction (see [[BoundedMinAgg]]). */
+  def boundedMin(x: Column, k: Int, descending: Boolean*): Column =
+    toCol(BoundedMinAgg(toExpr(x), k, descending.toSeq)
+      .toAggregateExpression())
   /** collect_list capped at cap+1 elements — exact for groups within
     * the cap, flag-sized for groups the caller drops anyway. */
   def cappedCollectLongs(x: Column, cap: Int): Column =
@@ -111,6 +113,10 @@ object GraftFunctions {
     toCol(VecCosineQ8Expr(toExpr(a), toExpr(b)))
   def wordShingles(text: Column, n: Column): Column =
     toCol(WordShinglesExpr(toExpr(text), toExpr(n)))
+  def wordWindowFps(words: Column, n: Column): Column =
+    toCol(WordWindowFpsExpr(toExpr(words), toExpr(n)))
+  def spanRollup(words: Column, dupStarts: Column, n: Column): Column =
+    toCol(SpanRollupExpr(toExpr(words), toExpr(dupStarts), toExpr(n)))
   def lshBandHashes(sig: Column, b: Column, r: Column): Column =
     toCol(LshBandsExpr(toExpr(sig), toExpr(b), toExpr(r)))
 

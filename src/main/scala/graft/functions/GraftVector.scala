@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -313,5 +315,79 @@ object GraftVector {
     var k = 0
     while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
     new GenericArrayData(out)
+  }
+
+  /** 48-bit fingerprint of every n-word window of `words`, in start
+    * order: the first 6 bytes (big-endian) of the md5 of the window's
+    * words joined by single spaces (UTF-8) — the value of the SQL
+    * `CAST(conv(substring(md5(array_join(slice(words, i, n), ' ')), 1,
+    * 12), 16, 10) AS BIGINT)`, which DuckDB computes identically, in one
+    * pass with no per-window string. Null words are skipped, as
+    * `array_join` skips them; an array shorter than n has no window. */
+  def wordWindowFps(words: ArrayData, n: Int): ArrayData = {
+    val len = words.numElements()
+    val out = new Array[Long](math.max(len - n + 1, 0))
+    val bytes = Array.tabulate(len)(i =>
+      if (words.isNullAt(i)) null else words.getUTF8String(i).getBytes)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val digest = new Array[Byte](16)
+    var i = 0
+    while (i < out.length) {
+      var first = true
+      var j = i
+      while (j < i + n) {
+        if (bytes(j) != null) {
+          if (!first) md.update(' '.toByte)
+          md.update(bytes(j))
+          first = false
+        }
+        j += 1
+      }
+      md.digest(digest, 0, 16)
+      var fp = 0L
+      var b = 0
+      while (b < 6) { fp = (fp << 8) | (digest(b) & 0xFFL); b += 1 }
+      out(i) = fp
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  private val space = UTF8String.fromString(" ")
+
+  /** One document's exact-substring rollup. `dupStarts` holds the
+    * 1-based starts of the document's duplicated n-word windows, in any
+    * order (null: none). Word p is removed iff a duplicated start lies in
+    * [p-n+1, p]; a span is a maximal run of removed words. Returns
+    * (n_tokens, n_removed, n_spans, kept_text), the kept words joined by
+    * single spaces — one pass over the words, whatever the span count. */
+  def spanRollup(words: ArrayData, dupStarts: ArrayData, n: Int)
+      : InternalRow = {
+    val len = words.numElements()
+    val starts =
+      if (dupStarts == null) Array.emptyIntArray else dupStarts.toIntArray()
+    java.util.Arrays.sort(starts)
+    val kept = new Array[UTF8String](len) // null = removed (concatWs skips)
+    var removed = 0L
+    var spans = 0L
+    var next = 0 // first start not yet passed
+    var latest = Int.MinValue // latest duplicated start at or before p
+    var prevCovered = false
+    var i = 0
+    while (i < len) {
+      val p = i + 1
+      while (next < starts.length && starts(next) <= p) {
+        latest = starts(next); next += 1
+      }
+      val covered = latest >= p - n + 1
+      if (covered) {
+        removed += 1
+        if (!prevCovered) spans += 1
+      } else if (!words.isNullAt(i)) kept(i) = words.getUTF8String(i)
+      prevCovered = covered
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](len.toLong, removed, spans,
+      UTF8String.concatWs(space, kept: _*)))
   }
 }

@@ -503,6 +503,51 @@ case class WordShinglesAllExpr(text: Expression, n: Expression)
     copy(newChildren(0), newChildren(1))
 }
 
+/** 48-bit md5-prefix fingerprints of every n-word window of a word
+  * array, in start order ([[GraftVector.wordWindowFps]]) — the fused
+  * form of the interpreted `transform(sequence, md5(array_join(slice)))`
+  * lambda. `n` must be foldable. */
+case class WordWindowFpsExpr(words: Expression, n: Expression)
+    extends Expression with RuntimeReplaceable {
+  override lazy val replacement: Expression =
+    objects.StaticInvoke(GraftVector.getClass,
+      ArrayType(LongType, containsNull = false), "wordWindowFps",
+      Seq(words, Cast(n, IntegerType)),
+      inputTypes = Seq(ArrayType(StringType), IntegerType),
+      returnNullable = false)
+  override def children: Seq[Expression] = Seq(words, n)
+  override def prettyName: String = "word_window_fps"
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(newChildren(0), newChildren(1))
+}
+
+/** Per-document exact-substring rollup ([[GraftVector.spanRollup]]):
+  * (n_tokens, n_removed, n_spans, kept_text) from the word array and the
+  * document's duplicated window starts (null when it has none). Null
+  * words yield null. `n` must be foldable. */
+case class SpanRollupExpr(words: Expression, dupStarts: Expression,
+    n: Expression) extends Expression with RuntimeReplaceable {
+  override lazy val replacement: Expression = {
+    val dt = StructType(Seq(
+      StructField("n_tokens", LongType, nullable = false),
+      StructField("n_removed", LongType, nullable = false),
+      StructField("n_spans", LongType, nullable = false),
+      StructField("kept_text", StringType, nullable = false)))
+    If(IsNull(words), Literal(null, dt),
+      objects.StaticInvoke(GraftVector.getClass, dt, "spanRollup",
+        Seq(words, dupStarts, Cast(n, IntegerType)),
+        inputTypes = Seq(ArrayType(StringType), ArrayType(IntegerType),
+          IntegerType),
+        propagateNull = false, returnNullable = false))
+  }
+  override def children: Seq[Expression] = Seq(words, dupStarts, n)
+  override def prettyName: String = "span_rollup"
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(newChildren(0), newChildren(1), newChildren(2))
+}
+
 /** Fused LSH band hashes ([[GraftVector.lshBandHashes]]): all b band
   * hashes of a minhash signature in one pass. `b`/`r` must be foldable. */
 case class LshBandsExpr(sig: Expression, b: Expression, r: Expression)
@@ -647,77 +692,107 @@ case class PragmaVersion() extends LeafExpression with CodegenFallback {
   override def prettyName: String = "pragma_version"
 }
 
-/** Bounded "k smallest values, sorted ascending" aggregate — the
-  * O(k)-state replacement for `slice(sort_array(collect_list(x)), 1, k)`,
-  * whose aggregation buffer grows with the GROUP (a dup-dense signature
-  * group at corpus scale can hold millions of member ids; only k are
-  * ever used). Buffer is a sorted primitive array capped at k: update is
-  * a short insertion, merge is a bounded merge, partials are map-side
-  * combined like any TypedImperativeAggregate. Deterministic for any
-  * input order; null inputs are skipped (matching collect_list). */
-case class BoundedMinLongsAgg(child: Expression, k: Int,
+/** Bounded "k smallest values, sorted" aggregate — the O(k)-state
+  * replacement for `slice(sort_array(collect_list(x)), 1, k)` and for a
+  * per-group `row_number() <= k` window, whose state grows with the
+  * GROUP (a dup-dense signature group at corpus scale can hold millions
+  * of member ids, a query's candidate stream is the whole corpus; only k
+  * are ever used). Any orderable child: by default its natural ascending
+  * order; for a struct child, `descending` gives each field's direction
+  * with Spark's per-direction null placement (ascending: nulls first,
+  * descending: nulls last), so `struct(cos, id)` with (true, false) is
+  * exactly `ORDER BY cos DESC, id`. The buffer is a sorted array capped
+  * at k: update is a short insertion, merge is a bounded merge, partials
+  * are map-side combined like any TypedImperativeAggregate.
+  * Deterministic for any input order; null inputs are skipped (matching
+  * collect_list). */
+case class BoundedMinAgg(child: Expression, k: Int,
+    descending: Seq[Boolean] = Nil,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
     extends org.apache.spark.sql.catalyst.expressions.aggregate
-      .TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[Long]]
+      .TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[Any]]
     with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
   require(k > 0, s"k must be positive, got $k")
+  @transient private lazy val ordering: Ordering[Any] =
+    (child.dataType, descending) match {
+      case (_, Nil) =>
+        org.apache.spark.sql.catalyst.util.TypeUtils
+          .getInterpretedOrdering(child.dataType)
+      case (st: StructType, desc) =>
+        new InterpretedOrdering(st.fields.toSeq.zip(desc).zipWithIndex.map {
+          case ((f, d), i) => SortOrder(BoundReference(i, f.dataType,
+            f.nullable), if (d) Descending else Ascending)
+        }).asInstanceOf[Ordering[Any]]
+    }
+  @transient private lazy val bufferProjection =
+    UnsafeProjection.create(Array[DataType](dataType))
   override def createAggregationBuffer()
-      : scala.collection.mutable.ArrayBuffer[Long] =
-    new scala.collection.mutable.ArrayBuffer[Long](k + 1)
-  private def insert(buf: scala.collection.mutable.ArrayBuffer[Long],
-      v: Long): Unit = {
-    if (buf.length == k && v >= buf.last) return
+      : scala.collection.mutable.ArrayBuffer[Any] =
+    new scala.collection.mutable.ArrayBuffer[Any](k + 1)
+  /** `v` must be owned by the caller (copied or freshly deserialized). */
+  private def insert(buf: scala.collection.mutable.ArrayBuffer[Any],
+      v: Any): Unit = {
+    if (buf.length == k && ordering.gteq(v, buf.last)) return
     var i = buf.length
-    while (i > 0 && buf(i - 1) > v) i -= 1
+    while (i > 0 && ordering.gt(buf(i - 1), v)) i -= 1
     buf.insert(i, v)
     if (buf.length > k) buf.remove(k)
   }
-  override def update(buf: scala.collection.mutable.ArrayBuffer[Long],
-      input: InternalRow): scala.collection.mutable.ArrayBuffer[Long] = {
+  override def update(buf: scala.collection.mutable.ArrayBuffer[Any],
+      input: InternalRow): scala.collection.mutable.ArrayBuffer[Any] = {
     val v = child.eval(input)
-    if (v != null) insert(buf, v.asInstanceOf[Long])
+    // copy only what is kept: the input row's buffers are reused
+    if (v != null && (buf.length < k || ordering.lt(v, buf.last)))
+      insert(buf, InternalRow.copyValue(v))
     buf
   }
-  override def merge(buf: scala.collection.mutable.ArrayBuffer[Long],
-      other: scala.collection.mutable.ArrayBuffer[Long])
-      : scala.collection.mutable.ArrayBuffer[Long] = {
+  override def merge(buf: scala.collection.mutable.ArrayBuffer[Any],
+      other: scala.collection.mutable.ArrayBuffer[Any])
+      : scala.collection.mutable.ArrayBuffer[Any] = {
     other.foreach(insert(buf, _))
     buf
   }
-  override def eval(buf: scala.collection.mutable.ArrayBuffer[Long]): Any =
+  override def eval(buf: scala.collection.mutable.ArrayBuffer[Any]): Any =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(buf.toArray)
-  override def serialize(buf: scala.collection.mutable.ArrayBuffer[Long])
-      : Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * buf.length)
-    bb.putInt(buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
+  override def serialize(buf: scala.collection.mutable.ArrayBuffer[Any])
+      : Array[Byte] =
+    // copy(): the projection reuses one output buffer across calls
+    bufferProjection(InternalRow(eval(buf))).copy().getBytes
   override def deserialize(bytes: Array[Byte])
-      : scala.collection.mutable.ArrayBuffer[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new scala.collection.mutable.ArrayBuffer[Long](n + 1)
+      : scala.collection.mutable.ArrayBuffer[Any] = {
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    val arr = row.getArray(0)
+    val buf = new scala.collection.mutable.ArrayBuffer[Any](k + 1)
     var i = 0
-    while (i < n) { buf += bb.getLong; i += 1 }
+    while (i < arr.numElements()) { buf += arr.get(i, child.dataType); i += 1 }
     buf
   }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType =
+    ArrayType(child.dataType, containsNull = false)
   override def nullable: Boolean = false
   override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(
-        s"bounded_min_longs needs a BIGINT child, got ${child.dataType}")
-  override def prettyName: String = "bounded_min_longs"
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+    val dirsFit = descending.isEmpty || (child.dataType match {
+      case st: StructType => st.length == descending.length
+      case _ => false
+    })
+    if (!RowOrdering.isOrderable(child.dataType))
+      TypeCheckFailure(s"bounded_min needs an orderable child, got " +
+        child.dataType.catalogString)
+    else if (!dirsFit)
+      TypeCheckFailure(s"bounded_min: ${descending.length} directions " +
+        s"for ${child.dataType.catalogString}; give one per struct field")
+    else TypeCheckSuccess
+  }
+  override def prettyName: String = "bounded_min"
   override def withNewMutableAggBufferOffset(newOffset: Int)
-      : BoundedMinLongsAgg = copy(mutableAggBufferOffset = newOffset)
+      : BoundedMinAgg = copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int)
-      : BoundedMinLongsAgg = copy(inputAggBufferOffset = newOffset)
+      : BoundedMinAgg = copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression)
-      : BoundedMinLongsAgg = copy(child = newChild)
+      : BoundedMinAgg = copy(child = newChild)
 }
 
 /** Capped `collect_list` for long keys: collects at most `cap + 1`

@@ -16,7 +16,9 @@ import graft.functions.GraftFunctions
   * Scale design (100 TB):
   *   - [[knnBruteForce]] broadcasts the (small) query set and streams the
   *     corpus once: O(corpus × queries) work, zero corpus shuffle, ranked
-  *     per-query with a window over the per-query candidate slice.
+  *     per query by a bounded top-k aggregate whose O(k) partials combine
+  *     map-side, so only k rows per query per partition reach the
+  *     shuffle.
   *   - [[annLsh]] buckets both sides by a 16-bit random-hyperplane sketch
   *     ([[graft.functions.GraftHash.rpSketch]], codegen'd single pass):
   *     the corpus shuffles once on the sketch key, each query probes only
@@ -44,18 +46,25 @@ object EmbeddingOps {
   /** Cosine similarity — dot and both norms in ONE pass per pair. */
   def cosine(a: Column, b: Column): Column = GraftFunctions.vecCosine(a, b)
 
-  /** Shared scoring tail for the three kNN variants: exact cosine over
-    * the candidate set, per-query dense rank, top-k. One definition so a
-    * semantics change (rounding, tie-break, NaN policy) cannot diverge
-    * between the exact and approximate paths. */
+  /** Shared scoring tail for every kNN variant: exact cosine over the
+    * candidate set, then the top k per query by (cos DESC, id ASC) with
+    * `rn` its 1-based rank — `row_number() <= k` over that order. One
+    * definition so a semantics change (rounding, tie-break, NaN policy)
+    * cannot diverge between the exact and approximate paths. The rank is
+    * a bounded aggregate ([[GraftFunctions.boundedMin]] over
+    * `struct(cos, id)`): O(k) state per query, combined map-side, so the
+    * shuffle carries k rows per query per partition instead of every
+    * candidate, and nothing sorts the candidate stream. */
   private def rankTopK(candidates: DataFrame, k: Int): DataFrame =
     candidates
-      .select(col("qid"), col("id"),
-        GraftFunctions.duckRound(cosine(col("vec"), col("qvec")), 6).as("cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("id"), col("cos"), col("rn"))
+      .select(col("qid"), struct(
+        GraftFunctions.duckRound(cosine(col("vec"), col("qvec")), 6)
+          .as("cos"), col("id")).as("c"))
+      .groupBy("qid")
+      .agg(GraftFunctions.boundedMin(col("c"), k, true, false).as("top"))
+      .select(col("qid"), posexplode(col("top")).as(Seq("pos", "c")))
+      .select(col("qid"), col("c.id").as("id"), col("c.cos").as("cos"),
+        (col("pos") + 1).as("rn"))
 
   /** Exact top-k cosine neighbors for each query vector.
     * Queries must be small enough to broadcast (they are, by construction:
@@ -145,15 +154,17 @@ object EmbeddingOps {
     * partial aggregate whose result is nlist·d rows, the same tiny
     * matrix, collected and re-broadcast; assignment is embedded in the
     * scan; the only other movement is the broadcast of the (small)
-    * query batch and a final per-query top-k window over candidates
-    * bounded by nprobe/nlist of the corpus. */
+    * query batch and a final per-query bounded top-k aggregate over
+    * candidates bounded by nprobe/nlist of the corpus. */
   /** Seeds `nlist` centroids from a deterministic hash-ordered corpus
     * sample and tightens them with `trainIters` spherical-k-means Lloyd
-    * steps. Each step: fused nearest-centroid assignment (map-only) →
-    * per-(cluster, dim) mean (one partial-agg shuffle whose result is
-    * nlist·dim cells) → collect the tiny matrix and re-broadcast.
-    * Cosine assignment is scale-invariant, so the unnormalized mean is
-    * a valid spherical update; empty clusters keep their seed. */
+    * steps. Each step: fused nearest-centroid assignment, projected
+    * BELOW the dimension explode so the probe runs once per vector, not
+    * once per exploded dimension (map-only) → per-(cluster, dim) mean
+    * (one partial-agg shuffle whose result is nlist·dim cells) → collect
+    * the tiny matrix and re-broadcast. Cosine assignment is
+    * scale-invariant, so the unnormalized mean is a valid spherical
+    * update; empty clusters keep their seed. */
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, seed: Long = 7L, trainIters: Int = 0): Array[Float] = {
     val sample = corpus
@@ -167,14 +178,7 @@ object EmbeddingOps {
     // would scatter Lloyd updates across centroid boundaries
     val dim = if (sample.isEmpty) 0 else sample.head.getSeq[Float](0).length
     for (_ <- 0 until trainIters) {
-      val cLit0 = lit(cents)
-      val means = corpus
-        .select(element_at(
-            GraftFunctions.ivfProbe(col(vecCol), cLit0, lit(1)), 1)
-            .as("cid"),
-          posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy("cid", "pos").agg(avg("x").as("m"))
-        .collect()
+      val means = lloydMeans(corpus, vecCol, cents).collect()
       val next = cents.clone()
       means.foreach { r =>
         next(r.getInt(0) * dim + r.getInt(1)) = r.getDouble(2).toFloat
@@ -183,6 +187,18 @@ object EmbeddingOps {
     }
     cents
   }
+
+  /** One Lloyd step's per-(cid, pos) means. The nearest-centroid probe
+    * sits in a projection below the dimension explode, so it runs once
+    * per vector; above the Generate it would run once per dimension. */
+  private[graft] def lloydMeans(corpus: DataFrame, vecCol: String,
+      cents: Array[Float]): DataFrame =
+    corpus
+      .select(element_at(
+          GraftFunctions.ivfProbe(col(vecCol), lit(cents), lit(1)), 1)
+          .as("cid"), col(vecCol).as("v"))
+      .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy("cid", "pos").agg(avg("x").as("m"))
 
   private val centroidMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
@@ -229,8 +245,8 @@ object EmbeddingOps {
     *
     * Plan shape: quantized corpus scan × broadcast quantized queries →
     * per-query top-m window → candidate-sized join back to the float
-    * corpus → exact [[rankTopK]]. The corpus is never shuffled; the only
-    * exchanges carry ≤ m·|queries| candidate rows. */
+    * corpus → exact [[rankTopK]] aggregate. The corpus is never
+    * shuffled; the only exchanges carry ≤ m·|queries| candidate rows. */
   def knnQuantizedRerank(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, m: Int): DataFrame =
     knnQuantizedRerankMargin(corpus, queries, idCol, vecCol, k, m)
@@ -426,7 +442,7 @@ object EmbeddingOps {
   /** Margin-based cross-corpus alignment. Scale shape: the cross-score
     * table is NEVER materialized, shuffled, or sorted — each consumer
     * streams the fused cosine kernel. The per-side top-4 neighborhoods
-    * run as bounded_min_longs over an order-encoded long
+    * run as bounded_min over an order-encoded long
     * ((1e6 - cos·1e6) << 33 | otherId, so k-smallest == (cos DESC,
     * id ASC) top-k exactly) — O(k) agg state, map-side combined. Both
     * argmax directions are struct-maxes — partial-aggregable again.
@@ -495,7 +511,7 @@ object EmbeddingOps {
           ((lit(1000000L) - round(col("cos") * 1e6, 0).cast("long")) *
             lit(8589934592L) + col(other)).as("ek"))
         .groupBy(key)
-        .agg(GraftFunctions.boundedMinLongs(col("ek"), 4).as("eks"))
+        .agg(GraftFunctions.boundedMin(col("ek"), 4).as("eks"))
         .select(col(key), GraftFunctions.duckRound(
           expr("aggregate(eks, 0D, (s, x) -> " +
             "s + (1000000 - (x div 8589934592)) / 1e6) / size(eks)"), 6)

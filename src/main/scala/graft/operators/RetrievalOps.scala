@@ -15,8 +15,10 @@ import graft.functions.GraftFunctions
   * Scale design (100 TB): chunking and embedding are map-only (pipeline
   * with the scan, zero shuffle); ranking broadcasts the query batch and
   * streams the corpus once, ranked per-query with a window over the
-  * candidate slice — the corpus never shuffles. For corpus×corpus loads
-  * use [[EmbeddingOps.annLsh]] instead.
+  * candidate slice — the corpus never shuffles. (EmbeddingOps' cosine
+  * kNN paths rank with a bounded top-k aggregate instead, which also
+  * keeps the full candidate stream off the shuffle.) For corpus×corpus
+  * loads use [[EmbeddingOps.annLsh]] instead.
   */
 object RetrievalOps {
 

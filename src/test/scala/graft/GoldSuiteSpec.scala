@@ -5,8 +5,7 @@ package graft
   * read-only reference checkout is not present. */
 class GoldSuiteSpec extends SparkSpecBase {
   test("all 75 reference gold queries match the DuckDB oracle") {
-    assume(new java.io.File("/root/reference/eval/data/dev.json").exists(),
-      "reference checkout not present")
+    assume(GoldSuite.refDevPresent, "reference checkout not present")
     assume(new java.io.File("/root/repo/fixtures/gold_expected.json")
       .exists(), "oracle dump not generated (tools/gold_oracle.py)")
     val results = GoldSuite.run(spark)

@@ -131,6 +131,123 @@ class KernelPropertySpec extends SparkSpecBase {
     assert(run(32, "3") == base)
   }
 
+  /** The relational exact-substring formulation the per-document
+    * kernels replaced, kept as the reference: an interpreted md5 lambda
+    * per window start, then every token posexploded, left-joined to its
+    * duplicated-start flag, a sliding-window max for coverage, a lag for
+    * span starts and a sorted collect_list for the surviving text. */
+  private object SubstrReference {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    def words(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), split(col("text"), " ").as("words"))
+    def starts(w: DataFrame, n: Int): DataFrame =
+      w.where(size(col("words")) >= n)
+        .select(col("doc_id"), explode(expr(
+          s"""transform(sequence(1, size(words) - ${n - 1}),
+             |  i -> struct(i AS s, CAST(conv(substring(
+             |    md5(array_join(slice(words, i, $n), ' ')),
+             |    1, 12), 16, 10) AS BIGINT) AS fp))""".stripMargin))
+          .as("st"))
+        .select(col("doc_id"), col("st.s").as("p"), col("st.fp").as("fp"))
+    def rollup(w: DataFrame, dupStarts: DataFrame, n: Int): DataFrame = {
+      val toks = w.select(col("doc_id"),
+          posexplode(col("words")).as(Seq("p0", "word")))
+        .select(col("doc_id"), (col("p0") + 1).as("p"), col("word"))
+      val slide = Window.partitionBy("doc_id").orderBy("p")
+        .rowsBetween(-(n - 1), Window.currentRow)
+      val seq0 = Window.partitionBy("doc_id").orderBy("p")
+      toks.join(dupStarts, Seq("doc_id", "p"), "left")
+        .na.fill(0, Seq("isdup"))
+        .withColumn("cov", max("isdup").over(slide))
+        .withColumn("span_start", (col("cov") === 1 &&
+          coalesce(lag("cov", 1).over(seq0), lit(0)) === 0).cast("int"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_tokens"),
+          sum("cov").cast("long").as("n_removed"),
+          sum("span_start").cast("long").as("n_spans"),
+          concat_ws(" ", expr(
+            """transform(filter(
+              |  sort_array(collect_list(struct(p, cov, word))),
+              |  x -> x.cov = 0), x -> x.word)""".stripMargin))
+            .as("kept_text"))
+    }
+    def dedup(docs: DataFrame, n: Int): DataFrame = {
+      val w = words(docs)
+      val st = starts(w, n)
+      val dupFp = st.groupBy("fp").agg(count(lit(1)).as("cnt"))
+        .where(col("cnt") >= 2).select("fp")
+      rollup(w, st.join(dupFp, "fp")
+        .select(col("doc_id"), col("p"), lit(1).as("isdup")), n)
+    }
+    def against(corpus: DataFrame, batch: DataFrame, n: Int): DataFrame = {
+      val indexFp = starts(words(corpus), n).select("fp").distinct()
+      val bw = words(batch)
+      rollup(bw, starts(bw, n).join(indexFp, "fp")
+        .select(col("doc_id"), col("p"), lit(1).as("isdup")), n)
+    }
+  }
+
+  /** Seeded docs over an ASCII + non-ASCII vocabulary with planted
+    * duplicated spans (shared across docs, adjacent, overlapping, and
+    * self-repeats), empty tokens from double spaces, and the edge
+    * texts: null, "", and shorter than any n used. */
+  private def plantedCorpus(n: Int, seed: Long): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Seq("a", "bb", "the", "of", "naïve", "café", "中文",
+      "テスト", "кот", "ß", "x1", "z") ++ (0 until 40).map(i => s"w$i")
+    def word() = vocab(rnd.nextInt(vocab.length))
+    val spans = (0 until 12).map(_ => (0 until 3 + rnd.nextInt(10))
+      .map(_ => word()))
+    val docs = (0 until n).map { i =>
+      val parts = (0 until 1 + rnd.nextInt(5)).flatMap { _ =>
+        rnd.nextInt(6) match {
+          case 0 | 1 => spans(rnd.nextInt(spans.length))
+          case 2 => // overlapping: a suffix of one planted span
+            val sp = spans(rnd.nextInt(spans.length))
+            sp.drop(rnd.nextInt(sp.length))
+          case 3 => Seq("") // an empty token: a double space
+          case _ => (0 until rnd.nextInt(12)).map(_ => word())
+        }
+      }
+      (i.toLong, parts.mkString(" "))
+    }
+    docs ++ Seq(
+      (n.toLong, null), (n + 1L, ""), (n + 2L, "a"),
+      (n + 3L, " a  bb "), (n + 4L, "中文 テスト"),
+      (n + 5L, (spans(0) ++ spans(0) ++ spans(0)).mkString(" ")))
+  }
+
+  private def substrRows(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Long, Long, Long, String)] =
+    df.select("doc_id", "n_tokens", "n_removed", "n_spans", "kept_text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getString(4))).toSeq.sortBy(_._1)
+
+  test("exactSubstrDedup and exactSubstrDedupAgainst equal the " +
+      "relational formulation on seeded docs with planted spans") {
+    import spark.implicits._
+    for ((n, seed) <- Seq((2, 11L), (4, 12L), (8, 13L))) {
+      val data = plantedCorpus(240, seed)
+      val docs = data.toDF("doc_id", "text").repartition(3)
+      val got = substrRows(TextOps.exactSubstrDedup(docs, "doc_id", "text",
+        n))
+      assert(got == substrRows(SubstrReference.dedup(docs, n)), s"n=$n")
+      assert(got.exists(_._3 > 0) && got.exists(_._3 == 0), s"n=$n")
+      assert(got.exists(_._4 > 1), s"n=$n: no doc with two spans")
+      // a null text has no output row; "" is one empty token
+      assert(!got.exists(_._1 == 240L))
+      assert(got.find(_._1 == 241L).contains((241L, 1L, 0L, 0L, "")))
+      val corpus = docs.where(pmod(col("doc_id"), lit(3)) === 0)
+      val batch = docs.where(pmod(col("doc_id"), lit(3)) =!= 0)
+      val inc = substrRows(TextOps.exactSubstrDedupAgainst(corpus, batch,
+        "doc_id", "text", n))
+      assert(inc == substrRows(SubstrReference.against(corpus, batch, n)),
+        s"against n=$n")
+      assert(inc.exists(_._3 > 0), s"against n=$n removes nothing")
+    }
+  }
+
   test("spanCorrupt is invariant to input partitioning and " +
       "reconstruction holds on 300 seeded docs") {
     import spark.implicits._

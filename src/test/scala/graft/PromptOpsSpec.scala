@@ -163,17 +163,7 @@ class PromptOpsSpec extends SparkSpecBase {
     assert(f(null) == null)
   }
 
-  test("correct_casing is a pure casing transform and idempotent on " +
-      "every reference dev.json query") {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val entries = mapper.readValue(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/eval/data/dev.json")),
-      classOf[java.util.List[Object]])
-    import scala.jdk.CollectionConverters._
-    val sqls = entries.asScala.toSeq
-      .map(_.asInstanceOf[java.util.Map[String, Any]].get("query").toString)
-    assert(sqls.length == 75)
+  private def casingOnlyAndIdempotent(sqls: Seq[String]): Unit =
     sqls.foreach { s =>
       val c = PromptOps.correctCasingString(s)
       // only letter case may change — never content, spacing or quotes
@@ -181,6 +171,18 @@ class PromptOpsSpec extends SparkSpecBase {
       // idempotent: canonical form is a fixed point
       assert(PromptOps.correctCasingString(c) == c, s.take(60))
     }
+
+  test("correct_casing is a pure casing transform and idempotent on " +
+      "the in-repo SQL corpus") {
+    casingOnlyAndIdempotent(SqlCorpus.inRepo)
+  }
+
+  test("correct_casing is a pure casing transform and idempotent on " +
+      "every reference dev.json query") {
+    assume(GoldSuite.refDevPresent, s"${GoldSuite.refDevPath} absent")
+    val sqls = SqlCorpus.devQueries()
+    assert(sqls.length == 75)
+    casingOnlyAndIdempotent(sqls)
   }
 
   test("PyRandom reproduces CPython getrandbits(32) streams") {

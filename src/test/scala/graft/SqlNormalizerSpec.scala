@@ -1,14 +1,13 @@
 package graft
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.dialect.SqlNormalizer
 import graft.dialect.SqlNormalizer._
-import scala.jdk.CollectionConverters._
 
 /** The parse→render normalizer's three contracts (see SqlNormalizer
   * scaladoc): canonical rendering on exotic inputs, idempotence, and
-  * token preservation — the latter two property-tested over every
-  * reference dev.json query. Execution-equivalence (75/75 gold entries
+  * token preservation — the latter two property-tested over the in-repo
+  * SQL corpus ([[SqlCorpus]]) and, where the reference checkout exists,
+  * over every reference dev.json query. Execution-equivalence (75/75 gold entries
   * through `--normalized`) runs in the GoldSuite gate. */
 class SqlNormalizerSpec extends SparkSpecBase {
 
@@ -60,32 +59,43 @@ class SqlNormalizerSpec extends SparkSpecBase {
     assert(norm(null) == null)
   }
 
-  private lazy val devQueries: Seq[String] = {
-    val entries = new ObjectMapper().readValue(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/eval/data/dev.json")),
-      classOf[java.util.List[Object]]).asScala.toSeq
-    entries.map(_.asInstanceOf[java.util.Map[String, Any]]
-      .get("query").toString)
-  }
-
-  test("idempotent over every dev.json query") {
-    devQueries.foreach { q =>
+  private def idempotent(sqls: Seq[String]): Unit =
+    sqls.foreach { q =>
       val once = norm(q)
       assert(norm(once) == once, q.take(60))
     }
+
+  private def tokenPreserving(sqls: Seq[String]): Unit = {
+    def canon(toks: Seq[Tok]): Seq[String] =
+      toks.filterNot(_.isInstanceOf[Comment]).map {
+        case Word(w) => "w:" + w.toLowerCase(java.util.Locale.ROOT)
+        case other => s"${other.getClass.getSimpleName.head}:${other.text}"
+      }
+    sqls.foreach { q =>
+      assert(canon(tokenize(norm(q))) == canon(tokenize(q)), q.take(60))
+    }
+  }
+
+  test("idempotent over the in-repo SQL corpus (catalog oracles and " +
+      "dev.json-cited statements)") {
+    assert(SqlCorpus.inRepo.length > 287)
+    idempotent(SqlCorpus.inRepo)
+  }
+
+  test("token-preserving over the in-repo SQL corpus (comments aside, " +
+      "keyword case aside)") {
+    tokenPreserving(SqlCorpus.inRepo)
+  }
+
+  test("idempotent over every dev.json query") {
+    assume(GoldSuite.refDevPresent, s"${GoldSuite.refDevPath} absent")
+    idempotent(SqlCorpus.devQueries())
   }
 
   test("token-preserving over every dev.json query (comments aside, " +
       "keyword case aside)") {
-    def canon(toks: Seq[Tok]): Seq[String] =
-      toks.filterNot(_.isInstanceOf[Comment]).map {
-        case Word(w) => "w:" + w.toLowerCase(java.util.Locale.ROOT)
-        case other => other.getClass.getSimpleName.head + ":" + other.text
-      }
-    devQueries.foreach { q =>
-      assert(canon(tokenize(norm(q))) == canon(tokenize(q)), q.take(60))
-    }
+    assume(GoldSuite.refDevPresent, s"${GoldSuite.refDevPath} absent")
+    tokenPreserving(SqlCorpus.devQueries())
   }
 
   test("normalize_sql expression is registered and matches the driver " +

@@ -297,7 +297,7 @@ class TextOpsSpec extends SparkSpecBase {
       val df = rows.toDF("g", "v").repartition(parts)
       val got = df.groupBy("g")
         .agg(graft.functions.GraftFunctions
-          .boundedMinLongs(col("v"), 4).as("ids"))
+          .boundedMin(col("v"), 4).as("ids"))
         .orderBy("g").collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
       val want = df.groupBy("g")
